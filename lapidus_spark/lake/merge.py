@@ -94,22 +94,6 @@ def _lww_combine(envelopes_or_rows: DataFrame, extra_names: tuple = ()) -> DataF
 OCC_CONFLICTS = 0
 OCC_REBASES = 0
 
-#: measurement seam (round 13, widened round 14): force the legacy
-#: aggregate-then-combine staging shape — snapshot cached, constraints
-#: validated against the cache, touched buckets from a separate
-#: distinct job — on BOTH the locked and the optimistic commit paths,
-#: so the single-exchange shapes can be A/B benchmarked INTERLEAVED
-#: in one process (serial A/B is hopeless on a noisy box — BENCH.md
-#: variance band). Never set outside experiments/.
-_FORCE_LEGACY_MERGE = False
-
-#: measurement seam (round 14): force the round-13 predicate-merge
-#: reporting shape (dedicated groupBy-count job over the cached
-#: envelope; stored buckets re-read from parquet by the commit) so the
-#: observe()-based counts + persisted-pruned-read restructure can be
-#: A/B'd interleaved. Never set outside experiments/.
-_FORCE_LEGACY_PREDICATE = False
-
 
 def merge_batch_into_lake(
     batch_df: DataFrame,
@@ -159,7 +143,7 @@ def merge_batch_into_lake(
     increasing per app.
 
     ``batch_df`` must be DETERMINISTIC (re-evaluable to the same
-    rows): the single-exchange path evaluates it in two independent
+    rows): the merge staging evaluates it in two independent
     actions (the touched-bucket distinct and the staging write), so a
     batch whose keys derive from ``rand()`` or a non-replayable source
     can yield a touched/written bucket mismatch, which
@@ -579,18 +563,15 @@ def merge_into_lake(
             buckets = set(vrow["__buckets"] or []) if need_buckets else None
             current_all = log._read_live(spark, lake_dir, manifest, buckets)
             if current_all is not None:
-                if not _FORCE_LEGACY_PREDICATE:
-                    # ONE scan of the stored buckets per merge (round
-                    # 14, guide §2.4/§5): the clause join AND the
-                    # commit's union both consume this pruned read —
-                    # persisting it halves the stored-side parquet I/O
-                    # per merge (the commit previously re-read the same
-                    # touched buckets from disk). Covers every bucket
-                    # the commit can touch: envelope keys are drawn
-                    # from the source keys (whose buckets prune this
-                    # read) or, with by-source clauses, from the
-                    # full-table read. Moves no enforcement point.
-                    current_all = current_all.persist()
+                # ONE scan of the stored buckets per merge: the clause
+                # join AND the commit's union both consume this pruned
+                # read, so the commit never re-reads the same touched
+                # buckets from disk. Covers every bucket the commit can
+                # touch: envelope keys are drawn from the source keys
+                # (whose buckets prune this read) or, with by-source
+                # clauses, from the full-table read. Moves no
+                # enforcement point.
+                current_all = current_all.persist()
                 # matched = a VISIBLE live row; tombstoned entities are
                 # NOT MATCHED (their re-insert goes through insert clauses)
                 target = current_all.filter(F.col("last_type") != "delete")
@@ -725,67 +706,39 @@ def merge_into_lake(
             )
             .persist()
         )
-        # the cache has exactly two consumers either way: the commit's
-        # touched-bucket/validation action and the staging write (and,
-        # on the legacy seam, the counting job) — without it the clause
-        # join would run once per consumer.
+        # the cache has exactly two consumers: the commit's touched-
+        # bucket/validation action and the staging write — without it
+        # the clause join would run once per consumer. The per-clause
+        # outcome counts ride the first of them as observe() metrics
+        # instead of a dedicated counting job; counting is reporting,
+        # not enforcement. An envelope where every clause missed
+        # commits nothing (empty touched set), and the metrics are
+        # still populated: ``_stage_merge`` runs its touched-bucket
+        # action before it can return empty-handed, and this function
+        # holds the writer lock and already consumed the txn marker
+        # check, so ``_merge_locked``'s early return is unreachable.
+        from pyspark.sql import Observation
+
         kinds = {t: k for _g, t, k, _c, _s in live_plan}
         kind_of = {"update": "updated", "delete": "deleted", "insert": "inserted"}
         counts = {"updated": 0, "deleted": 0, "inserted": 0}
-        if _FORCE_LEGACY_PREDICATE:
-            by_tag = {
-                r["__action"]: int(r["n"])
-                for r in envelope.groupBy("__action")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            for tag, n in by_tag.items():
-                counts[kind_of[kinds[tag]]] += n
-            if sum(counts.values()):
-                _merge_locked(
-                    spark,
-                    envelope.drop("__action"),
-                    lake_dir,
-                    n_buckets,
-                    retain_versions,
-                    tuple(carried),
-                    txn,
-                )
-        else:
-            # round 14 (guide §1.2, VERDICT r13 #2): the per-clause
-            # outcome counts ride the commit's OWN first action as
-            # observe() metrics instead of a dedicated groupBy/collect
-            # job — one fewer Spark job per merge (per TRIGGER on the
-            # streaming predicate sinks), with the refuse-before-write
-            # point unmoved. Counting is reporting, not enforcement.
-            # An empty envelope commits nothing inside _merge_locked
-            # (empty touched set), matching the legacy skip; the
-            # metrics are always populated because _merge_locked runs
-            # at least one action here (this function holds the writer
-            # lock and already consumed the txn marker check, so its
-            # early returns are unreachable).
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            observed = envelope.observe(
-                obs,
-                *[
-                    F.count(F.when(F.col("__action") == t, 1)).alias(t)
-                    for t in kinds
-                ],
-            )
-            _merge_locked(
-                spark,
-                observed.drop("__action"),
-                lake_dir,
-                n_buckets,
-                retain_versions,
-                tuple(carried),
-                txn,
-                current=current_all,
-            )
-            for tag, n in obs.get.items():
-                counts[kind_of[kinds[tag]]] += int(n)
+        obs = Observation()
+        observed = envelope.observe(
+            obs,
+            *[F.count(F.when(F.col("__action") == t, 1)).alias(t) for t in kinds],
+        )
+        _merge_locked(
+            spark,
+            observed.drop("__action"),
+            lake_dir,
+            n_buckets,
+            retain_versions,
+            tuple(carried),
+            txn,
+            current=current_all,
+        )
+        for tag, n in obs.get.items():
+            counts[kind_of[kinds[tag]]] += int(n)
         m = log._read_manifest(lake_dir)
         return {"version": int(m["version"]) if m else 0, **counts}
     finally:
@@ -842,14 +795,15 @@ def _resolve_base(lake_dir: str, n_buckets: int | None, adopt_legacy: bool):
 
 def _snapshot_shape(envelopes: DataFrame, extra_cols: tuple = ()) -> DataFrame:
     """Envelope rows projected to the snapshot column shape WITHOUT
-    the per-entity aggregation — the raw-row side of the single-
-    exchange merge (round 13): because the LWW combine is associative
+    the per-entity aggregation — the raw-row side of the merge
+    staging (``_stage_merge``): because the LWW combine is associative
     and idempotent over its (last_ts, last_seq) comparator,
     ``_lww_combine(current ∪ raw_rows)`` equals
     ``_lww_combine(current ∪ snapshot_stream(raw))`` row for row, and
     feeding raw rows lets ONE hash aggregation (with map-side partial
     aggregation collapsing in-batch duplicates before the exchange —
-    guide §2.3) replace the old two-step aggregate-then-combine."""
+    guide §2.3) do the in-batch LWW and the combine with the stored
+    rows together."""
     return envelopes.select(
         F.col("pk").alias("entity_id"),
         F.col("event_seq").alias("last_seq"),
@@ -860,60 +814,58 @@ def _snapshot_shape(envelopes: DataFrame, extra_cols: tuple = ()) -> DataFrame:
     )
 
 
-def _merged_for_batch(
+def _stage_merge(
     spark,
     lake_dir: str,
-    manifest: dict | None,
-    updates,
+    base: dict | None,
+    batch_df: DataFrame,
     n_buckets: int,
-    all_extras=(),
-    touched: list | None = None,
+    extra_cols: tuple,
     current=None,
 ):
-    """Shared merge compute: the touched-bucket list (metadata-sized
-    collect) and the LWW combine of the affected buckets' current
-    rows with the batch — everything about a merge EXCEPT the commit
-    protocol, so the locked/optimistic twins differ only in locking.
-    ``all_extras`` is the POST-merge schema epoch (manifest columns +
-    any accreted by this batch); both sides null-fill to it before
-    combining.
+    """The one merge staging step shared by the locked and optimistic
+    writers: everything about a merge EXCEPT the commit protocol.
+    Returns ``(touched, merged, all_extras, evolved)`` — the sorted
+    touched-bucket list (metadata-sized collect), the LWW combine of
+    those buckets' stored rows with the batch (lazy; the caller's
+    staging write is its one action), and the post-merge schema epoch
+    from ``_evolved_schema``. An empty ``touched`` means the batch
+    commits nothing (``merged`` is then None).
 
-    ``touched`` pre-computed (round 13): callers on the single-
-    exchange path derive the touched buckets from the RAW batch (a
-    partial-aggregated distinct over ≤n_buckets ints — no wide
-    shuffle, no cache) and pass them in; ``updates`` then need not be
-    persisted, because exactly one downstream action (the staging
-    write) consumes it. When ``touched`` is None the legacy contract
-    holds: ``updates`` must already be persisted by the caller (the
-    legacy-seam constraint path, which reuses it across the validation
-    aggregate and the staging write).
+    Shape: no cache; the raw batch rows flow into the staging write's
+    ONE hash aggregation, where map-side partial aggregation collapses
+    in-batch duplicates before the exchange and the associative,
+    idempotent LWW max combines them with the stored rows in the same
+    pass (see ``_snapshot_shape``). The touched set comes from a
+    partial-aggregated distinct over the raw batch — or, on a table
+    with CHECK constraints, rides the SAME job as the validation
+    (``_validated_touched``), which refuses before any staging work.
+    Both sides null-fill to the post-merge epoch before combining.
 
-    ``current`` pre-read (round 14): the predicate merge already holds
-    a persisted read of the live buckets covering every bucket this
-    batch can touch, read under the SAME ``manifest``; filtering it to
-    ``touched`` replaces the commit's second parquet scan of the same
-    buckets. ``None`` = read the touched buckets from the manifest
-    (every other caller)."""
-    all_extras = list(all_extras)
-    if touched is None:
-        touched = sorted(
-            r["bucket"] for r in updates.select("bucket").distinct().collect()
-        )
+    ``current``: an ALREADY-READ live frame covering at least every
+    bucket this batch can touch, read under ``base`` (the predicate
+    merge passes its persisted pruned read); filtering it to the
+    touched buckets replaces a second parquet scan of the same
+    buckets. ``None`` = read the touched buckets from ``base``."""
+    bucket_col = F.pmod(F.xxhash64("entity_id"), F.lit(n_buckets)).cast("int")
+    updates = _snapshot_shape(batch_df, extra_cols).withColumn("bucket", bucket_col)
+    all_extras, evolved = _evolved_schema(base, updates, extra_cols)
+    cons = (base or {}).get("constraints", {})
+    if cons:
+        touched = _validated_touched(updates, all_extras, cons)
+    else:
+        touched = _touched_of_raw(batch_df, n_buckets)
     if not touched:
-        return [], None
+        return [], None, all_extras, evolved
     if current is not None:
         current = current.filter(F.col("bucket").isin([int(b) for b in touched]))
-    elif manifest:
-        current = log._read_live(spark, lake_dir, manifest, set(touched))
+    elif base:
+        current = log._read_live(spark, lake_dir, base, set(touched))
     names = tuple(c["name"] for c in all_extras)
     updates = _align_extras(updates, all_extras)
     if current is not None:
-        merged = _lww_combine(
-            _align_extras(current, all_extras).unionByName(updates), names
-        )
-    else:
-        merged = _lww_combine(updates, names)
-    return touched, merged
+        updates = _align_extras(current, all_extras).unionByName(updates)
+    return touched, _lww_combine(updates, names), all_extras, evolved
 
 
 def _touched_of_raw(batch_df: DataFrame, n_buckets: int) -> list:
@@ -1086,71 +1038,17 @@ def _merge_locked(
     txn: tuple | None = None,
     current=None,
 ) -> None:
-    """``current``: optional ALREADY-READ live frame covering at least
-    every bucket this batch touches, read under the manifest this
-    merge commits against (the predicate merge passes its persisted
-    pruned read — see ``_merged_for_batch``). ``None`` everywhere
-    else."""
+    """Stage and publish one merge under the writer lock the caller
+    holds. ``current``: see ``_stage_merge`` (the predicate merge
+    passes its persisted pruned read; ``None`` everywhere else)."""
     manifest, n_buckets = _resolve_base(lake_dir, n_buckets, adopt_legacy=True)
     if _txn_already_applied(manifest, txn):
         return  # replayed batch: the marker makes the no-op FREE
-    bucket_col = F.pmod(F.xxhash64("entity_id"), F.lit(n_buckets)).cast("int")
-    cons = (manifest or {}).get("constraints", {})
-    if _FORCE_LEGACY_MERGE:
-        # legacy aggregate-then-combine shape (rounds ≤12; kept as the
-        # interleaved-A/B seam): aggregate the batch into a cached
-        # snapshot, validate constraints against the cache, derive the
-        # touched buckets in a separate distinct job, combine the cache
-        # with the stored rows in a second aggregation.
-        updates = snapshot_stream(batch_df, extra_cols).withColumn(
-            "bucket", bucket_col
-        )
-        all_extras, evolved = _evolved_schema(manifest, updates, extra_cols)
-        updates = updates.persist()
-        try:
-            _enforce_constraints(manifest, updates, all_extras)
-            touched, merged = _merged_for_batch(
-                spark, lake_dir, manifest, updates, n_buckets, all_extras
-            )
-            if not touched:
-                return
-            _publish_version(
-                lake_dir,
-                manifest,
-                merged,
-                touched,
-                n_buckets,
-                retain_versions,
-                extra={"columns": all_extras} if evolved else None,
-                txn=txn,
-            )
-        finally:
-            updates.unpersist()
-        return
-    # Single-exchange merge (round 13; constraint path joined in round
-    # 14 — guide §2.3/§2.4): no cache, raw rows flow into the staging
-    # write's ONE hash aggregation (map-side partial aggregation
-    # collapses in-batch duplicates before the exchange; the LWW max
-    # is associative/idempotent, so the result is row-identical to the
-    # legacy aggregate-then-combine). Touched buckets come from a
-    # partial-aggregated distinct over the raw batch — or, on
-    # constrained tables, ride the SAME job as the CHECK validation
-    # (one per-key aggregation computes the batch's LWW winners, the
-    # violation counts over the visible winners, and the touched
-    # set; refusal still happens before any staging work, so the
-    # refuse-before-commit point is unmoved).
-    updates = _snapshot_shape(batch_df, extra_cols).withColumn("bucket", bucket_col)
-    all_extras, evolved = _evolved_schema(manifest, updates, extra_cols)
-    if cons:
-        touched = _validated_touched(updates, all_extras, cons)
-    else:
-        touched = _touched_of_raw(batch_df, n_buckets)
+    touched, merged, all_extras, evolved = _stage_merge(
+        spark, lake_dir, manifest, batch_df, n_buckets, extra_cols, current
+    )
     if not touched:
         return
-    touched, merged = _merged_for_batch(
-        spark, lake_dir, manifest, updates, n_buckets, all_extras,
-        touched=touched, current=current,
-    )
     _publish_version(
         lake_dir,
         manifest,
@@ -1206,19 +1104,17 @@ def _txn_already_applied(manifest: dict | None, txn: tuple | None) -> bool:
 
 
 def _validated_touched(updates: DataFrame, all_extras, cons: dict) -> list:
-    """CHECK validation and the touched-bucket set in ONE job (round
-    14, guide §1.2/§2.3 — VERDICT r13 #5): a fresh per-key LWW
+    """CHECK constraints at write time (Delta's enforcement point)
+    fused with the touched-bucket set into ONE job: a per-key LWW
     aggregation of the raw snapshot-shaped batch rows computes the
-    batch's winners (row-identical to the legacy cached snapshot —
-    the combine is the module's semilattice), the violation counts
-    over the VISIBLE winners, and the distinct bucket set, in one
-    pass. Raises before any staging work — the refuse-before-commit
-    enforcement point is unmoved; only the snapshot cache and the
-    separate touched-bucket job are gone. Tombstones are exempt from
-    the CHECKs (payload nulled by design — the outer CASE guards the
-    expression from ever evaluating on them) but still contribute
-    their buckets. SQL-standard CHECK semantics: NULL (unknown)
-    passes, only FALSE violates."""
+    batch's winners (the module's semilattice combine), the violation
+    counts over the VISIBLE winners, and the distinct bucket set, in
+    one pass over the batch (never the table). Raises before any
+    staging work, so a refused commit leaves the table unchanged.
+    Tombstones are exempt from the CHECKs (payload nulled by design —
+    the outer CASE guards the expression from ever evaluating on
+    them) but still contribute their buckets. SQL-standard CHECK
+    semantics: NULL (unknown) passes, only FALSE violates."""
     names = tuple(c["name"] for c in all_extras)
     winners = _lww_combine(_align_extras(updates, all_extras), names)
     aggs = [
@@ -1237,32 +1133,6 @@ def _validated_touched(updates: DataFrame, all_extras, cons: dict) -> list:
             f"({ {n: cons[n] for n in bad} }); commit refused, table unchanged"
         )
     return sorted(row["__buckets"] or [])
-
-
-def _enforce_constraints(manifest: dict | None, updates: DataFrame, all_extras) -> None:
-    """CHECK constraints at write time (Delta's enforcement point):
-    every VISIBLE row of the batch must satisfy every recorded
-    constraint — one aggregate job over the batch (never the table),
-    zero cost when the table has no constraints. SQL-standard CHECK
-    semantics: NULL (unknown) passes, only FALSE violates. Tombstones
-    are exempt (their payload is nulled by design)."""
-    cons = (manifest or {}).get("constraints", {})
-    if not cons:
-        return
-    vis = _align_extras(updates, all_extras).filter(F.col("last_type") != "delete")
-    aggs = [
-        F.sum(
-            F.when(~F.coalesce(F.expr(e), F.lit(True)), 1).otherwise(0)
-        ).alias(n)
-        for n, e in sorted(cons.items())
-    ]
-    row = vis.agg(*aggs).first()
-    bad = {n: int(row[n]) for n in sorted(cons) if row[n]}
-    if bad:
-        raise ConstraintViolationError(
-            f"merge batch violates CHECK constraint(s) {bad} "
-            f"({ {n: cons[n] for n in bad} }); commit refused, table unchanged"
-        )
 
 
 #: one-shot guard for the cross-process race barrier below
@@ -1405,8 +1275,8 @@ def merge_batch_optimistic(
     moved manifest never clobbers a sibling app's watermark.
 
     ``batch_df`` must be DETERMINISTIC (re-evaluable) — same contract
-    and same reason as ``merge_batch_into_lake``: the single-exchange
-    staging evaluates it in independent actions."""
+    and same reason as ``merge_batch_into_lake``: the shared staging
+    (``_stage_merge``) evaluates it in independent actions."""
     _validate_merge_args(n_buckets, retain_versions)
     _validate_extra_cols(extra_cols)
     _validate_txn(txn)
@@ -1414,7 +1284,6 @@ def merge_batch_optimistic(
     import uuid
 
     spark = batch_df.sparkSession
-    snap = snapshot_stream(batch_df, extra_cols)
     #: staging carried across attempts: (base, nb, touched, commit_rel,
     #: all_extras, evolved) — a lock timeout with an UNCHANGED manifest
     #: keeps the staged result (re-running the identical Spark job buys
@@ -1436,40 +1305,11 @@ def merge_batch_optimistic(
                 base, nb = _resolve_base(lake_dir, n_buckets, adopt_legacy=False)
                 if _txn_already_applied(base, txn):
                     return base  # replayed batch: skip, zero Spark work
-                bucket_col = F.pmod(F.xxhash64("entity_id"), F.lit(nb)).cast("int")
-                cons = (base or {}).get("constraints", {})
-                legacy = _FORCE_LEGACY_MERGE
-                if legacy:
-                    # legacy shape (A/B seam, both constraint states):
-                    # cached snapshot, separate validation + touched jobs
-                    updates = snap.withColumn("bucket", bucket_col).persist()
-                else:
-                    # single-exchange staging (round 13; constraints
-                    # joined round 14 — see _merge_locked): raw rows, no
-                    # cache; the staging write's one aggregation does
-                    # in-batch LWW and combine together; constrained
-                    # tables fuse validation + touched into one job
-                    updates = _snapshot_shape(batch_df, extra_cols).withColumn(
-                        "bucket", bucket_col
-                    )
-                all_extras, evolved = _evolved_schema(base, updates, extra_cols)
                 commit_rel = None
                 try:
-                    if legacy:
-                        _enforce_constraints(base, updates, all_extras)
-                        touched, merged = _merged_for_batch(
-                            spark, lake_dir, base, updates, nb, all_extras
-                        )
-                    elif cons:
-                        touched, merged = _merged_for_batch(
-                            spark, lake_dir, base, updates, nb, all_extras,
-                            touched=_validated_touched(updates, all_extras, cons),
-                        )
-                    else:
-                        touched, merged = _merged_for_batch(
-                            spark, lake_dir, base, updates, nb, all_extras,
-                            touched=_touched_of_raw(batch_df, nb),
-                        )
+                    touched, merged, all_extras, evolved = _stage_merge(
+                        spark, lake_dir, base, batch_df, nb, extra_cols
+                    )
                     if not touched:
                         return base
                     commit_rel = (
@@ -1494,9 +1334,6 @@ def merge_batch_optimistic(
                     ) and _is_missing_file_error(exc):
                         continue
                     raise
-                finally:
-                    if legacy:
-                        updates.unpersist()
             if _race_hook is not None:
                 _race_hook(attempt)
             _env_race_barrier(attempt)

@@ -69,7 +69,7 @@ from pyspark.sql.datasource import (
 )
 
 #: envelope core columns the batch must carry (same contract as
-#: merge_batch_into_lake's snapshot_stream)
+#: merge_batch_into_lake's staging, merge._snapshot_shape)
 _ENVELOPE_CORE = ("pk", "event_seq", "ts", "type", "item")
 
 #: staged/stored snapshot-row names the combine operates on
@@ -294,7 +294,7 @@ class LakeBatchWriter(DataSourceArrowWriter):
         # -- staged rows, epoch-aligned (same path the reader runs),
         # then the WITHIN-BATCH LWW (snapshot_stream's step): one row
         # per entity, winner by (ts, seq). Constraints check the
-        # WINNERS — exactly merge._enforce_constraints' enforcement
+        # WINNERS — exactly merge._validated_touched's enforcement
         # point; an in-batch loser is never validated on the Spark
         # path and must not be refused here either.
         staged = _lww_take_last(
@@ -326,13 +326,14 @@ class LakeBatchWriter(DataSourceArrowWriter):
         # set, and each filter scans only the batch-sized staged
         # table. entity→bucket is functional under the pinned layout,
         # so per-bucket LWW equals the global LWW restricted to the
-        # bucket, row for row (concat order — staged after stored —
-        # and the sort keys are unchanged, so output bytes are
-        # identical). The single-process commit remains this writer's
-        # documented cost model for CDC micro-batches; bulk backfills
-        # belong to the Spark-distributed merge_batch_into_lake (the
-        # DataSource commit API runs session-less, so the split
-        # cannot be automated from here).
+        # bucket, row for row (concat order — staged slice first,
+        # stored files after — and the sort keys are unchanged, so
+        # output bytes are identical). The single-process commit
+        # remains this writer's documented cost model for CDC
+        # micro-batches; bulk backfills belong to the Spark-
+        # distributed merge_batch_into_lake (the DataSource commit API
+        # runs session-less, so the split cannot be automated from
+        # here).
         version = (manifest["version"] if manifest else 0) + 1
         commit_rel = f"commits/{version:010d}"
         commit_abs = os.path.join(self.lake_dir, commit_rel)
@@ -387,7 +388,7 @@ class LakeBatchWriter(DataSourceArrowWriter):
     def _enforce_constraints_duckdb(self, manifest, staged) -> None:
         """CHECK constraints over the staged batch's VISIBLE rows —
         same enforcement point, same NULL-passes semantics, same
-        refusal error as ``merge._enforce_constraints``; evaluated by
+        refusal error as ``merge._validated_touched``; evaluated by
         DuckDB SQL in the session-less worker (constraint expressions
         are plain comparisons/boolean SQL, portable by
         construction)."""

@@ -104,11 +104,9 @@ from lapidus_spark.lake.log import (  # noqa: F401
     _write_history,
 )
 from lapidus_spark.lake.merge import (  # noqa: F401
-    _enforce_constraints,
     _evolved_schema,
     _lww_combine,
     _merge_locked,
-    _merged_for_batch,
     _occ_conflicts,
     _resolve_base,
     _txn_already_applied,

@@ -137,12 +137,15 @@ def test_ngram_index_is_order_preserving_dict_encode(spark):
 
 @pytest.mark.parametrize("seed", [13, 4242])
 def test_distributed_rank_equals_legacy_single_partition_rank(spark, seed):
-    """Round-14 internals pin for the two-phase vocabulary rank
-    (VERDICT r13 #1): on a seeded random corpus with adversarial df
-    skew, the distributed rank's token ids are BIT-EQUAL to the
-    legacy global row_number window — and the distributed build plans
-    carry no single-partition exchange (while the legacy rank
-    provably does, which keeps this assertion meaningful)."""
+    """Internals pin for the two-phase vocabulary rank (VERDICT r13
+    #1): on a seeded random corpus with adversarial df skew, the
+    distributed rank's token ids are BIT-EQUAL to the global
+    row_number window it replaced — built here as the reference — and
+    so is the encoded index; the distributed build plans carry no
+    single-partition exchange (while the window reference provably
+    does, which keeps that assertion meaningful)."""
+    from pyspark.sql.window import Window
+
     from lapidus_spark.functions import dedup
 
     rng = random.Random(seed)
@@ -163,22 +166,32 @@ def test_distributed_rank_equals_legacy_single_partition_rank(spark, seed):
         (F.col("n_chars") / LENGTH_BAND).cast("long").alias("len_band"),
         F.expr("array_distinct(split(lower(text), ' '))").alias("ts"),
     )
-    dedup._FORCE_LEGACY_RANK = True
-    try:
-        legacy = {r["doc_id"]: r["st"] for r in _ngram_df_sorted(t).collect()}
-    finally:
-        dedup._FORCE_LEGACY_RANK = False
-    new = {r["doc_id"]: r["st"] for r in _ngram_df_sorted(t).collect()}
-    assert new == legacy
-
-    # plan shape: the distributed rank never funnels the vocabulary
-    # through one task; the legacy window does (the r13 scale ceiling)
     tok = t.select(
         "doc_id", "lang", "len_band", F.size("ts").alias("n_toks"),
         F.explode("ts").alias("token"),
     )
     dfreq = tok.groupBy("token").agg(F.count("*").alias("df"))
+    legacy_tdict = dfreq.select(
+        "token", F.row_number().over(Window.orderBy("df", "token")).alias("tid")
+    )
 
+    def tid_map(df) -> dict:
+        return {r["token"]: r["tid"] for r in df.collect()}
+
+    assert tid_map(dedup._rank_vocab(dfreq)) == tid_map(legacy_tdict)
+    legacy = {
+        r["doc_id"]: r["st"]
+        for r in tok.join(legacy_tdict, "token")
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list("tid")).alias("st"))
+        .collect()
+    }
+    new = {r["doc_id"]: r["st"] for r in _ngram_df_sorted(t).collect()}
+    assert new == legacy
+
+    # plan shape: the distributed rank never funnels the vocabulary
+    # through one task; the window reference does (the r13 scale
+    # ceiling)
     def plan_of(df) -> str:
         return df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -191,11 +204,6 @@ def test_distributed_rank_equals_legacy_single_partition_rank(spark, seed):
         dfreq.repartitionByRange(p, "df", "token")
     )
     assert "SinglePartition" not in plan_of(dedup._rank_vocab(dfreq))
-    from pyspark.sql.window import Window
-
-    legacy_tdict = dfreq.select(
-        "token", F.row_number().over(Window.orderBy("df", "token")).alias("tid")
-    )
     assert "SinglePartition" in plan_of(legacy_tdict)
 
 

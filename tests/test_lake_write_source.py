@@ -541,7 +541,7 @@ def test_vacuum_sweeps_stale_staging(spark, tmp_path):
 
 
 def test_constraints_check_batch_winners_only(spark, tmp_path):
-    """Enforcement point parity: merge._enforce_constraints validates
+    """Enforcement point parity: merge._validated_touched validates
     the batch SNAPSHOT (within-batch LWW winners), so an event that
     violates a CHECK but LOSES the in-batch LWW must not refuse the
     commit — on either path."""

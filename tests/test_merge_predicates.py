@@ -258,6 +258,51 @@ def test_stale_stamp_yields_to_stored_row(spark, tmp_path):
     assert _visible(spark, lake)["k0001"]["item"] == "v0-0001"  # ...and lost LWW
 
 
+def test_all_clauses_miss_commits_nothing(spark, tmp_path):
+    """Every clause misses (matched rows fail the update condition,
+    the unmatched row fails the insert condition): the envelope is
+    empty, so the merge publishes no version, reports zero outcomes
+    and leaves no staged commit dir behind. The merge runs in a thread
+    with a deadline because the outcome counts come from an
+    ``Observation``, whose ``get`` blocks forever if the staging
+    returns before running any action on the observed frame."""
+    import os
+    import threading
+
+    lake = str(tmp_path / "lake")
+    _build(spark, lake)
+    v0 = M._read_manifest(lake)["version"]
+    commits = os.path.join(lake, "commits")
+    dirs0 = sorted(os.listdir(commits))
+    out = {}
+
+    def run():
+        try:
+            out["res"] = M.merge_into_lake(
+                _source(spark, [("k0001", 1), ("k0099", -1)], "pk string, qty int"),
+                lake,
+                stamp_seq=10_000,
+                stamp_ts=STAMP_TS,
+                when_matched=(
+                    {"condition": "source.qty > 100", "update": {"qty": "source.qty"}},
+                ),
+                when_not_matched=({"condition": "source.qty > 0", "insert": None},),
+                retain_versions=4,
+            )
+        except Exception as exc:  # re-raised below, on the test thread
+            out["exc"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "merge_into_lake hung waiting on its Observation"
+    if "exc" in out:
+        raise out["exc"]
+    assert out["res"] == {"version": v0, "updated": 0, "deleted": 0, "inserted": 0}
+    assert M._read_manifest(lake)["version"] == v0
+    assert sorted(os.listdir(commits)) == dirs0
+
+
 def test_empty_lake_bootstrap_insert_only(spark, tmp_path):
     lake = str(tmp_path / "lake")
     res = M.merge_into_lake(
