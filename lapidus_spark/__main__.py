@@ -1,7 +1,7 @@
 """CLI daemon entry (ctl_cli, reference index.js:5-53).
 
     python -m lapidus_spark -c config.json [--validate-only]
-    python -m lapidus_spark --compact LAKE_DIR [--retain-versions K] [--optimistic] [--cluster-by entity_id,last_ts]
+    python -m lapidus_spark --compact LAKE_DIR [--retain-versions K] [--cluster-by entity_id,last_ts]
     python -m lapidus_spark --rebucket LAKE_DIR --buckets N
     python -m lapidus_spark --restore LAKE_DIR --version N
     python -m lapidus_spark --vacuum LAKE_DIR [--retain-versions K] [--dry-run]
@@ -19,6 +19,10 @@ administration commands run one lake table operation and exit; the
 mutating ones take the lake's single-writer lock, so run them while
 the daemon's lake sink is paused (a colliding writer raises — or
 waits out a transient flip-lock hold — instead of corrupting).
+``--compact`` is the exception: it rewrites with no lock held and
+locks only its manifest flip, so it runs beside a live daemon; the
+buckets the daemon merges meanwhile are reported as lost to
+concurrent merges and stay armed for the next run.
 ``--restore``, ``--vacuum``, ``--clone``, ``--rename-column``,
 ``--history`` and ``--detail`` are metadata-only and need no Spark
 session at all."""
@@ -67,14 +71,6 @@ def main(argv: list[str] | None = None) -> int:
         type=int,
         default=None,
         help="split valve for oversized buckets during --compact",
-    )
-    ap.add_argument(
-        "--optimistic",
-        action="store_true",
-        help="--compact with optimistic concurrency: stage the rewrite "
-        "without holding the writer lock (a running daemon keeps "
-        "committing) and apply only the buckets no concurrent merge "
-        "touched — losing a race defers maintenance, never blocks it",
     )
     ap.add_argument(
         "--stats-columns",
@@ -250,8 +246,6 @@ def main(argv: list[str] | None = None) -> int:
             ap.error("pass exactly one maintenance/administration command")
         if args.rebucket and args.buckets is None:
             ap.error("--rebucket requires --buckets")
-        if args.optimistic and not args.compact:
-            ap.error("--optimistic applies to --compact only (a rebucket is a global layout swap)")
         if args.restore and args.version is None:
             ap.error("--restore requires --version")
         if args.delete and not args.where:
@@ -398,7 +392,6 @@ def main(argv: list[str] | None = None) -> int:
                 target_files_per_bucket=args.target_files_per_bucket,
                 max_records_per_file=args.max_records_per_file,
                 retain_versions=retain,
-                concurrency="optimistic" if args.optimistic else "locked",
                 cluster_by=tuple(args.cluster_by.split(",")),
                 stats_columns=(
                     tuple(c for c in args.stats_columns.split(",") if c)
@@ -411,9 +404,9 @@ def main(argv: list[str] | None = None) -> int:
                     else None
                 ),
             )
-            skipped = f" ({res['skipped_buckets']} lost to concurrent merges)" if args.optimistic else ""
             print(
-                f"compacted {res['compacted_buckets']} bucket(s); version {res['version']}{skipped}"
+                f"compacted {res['compacted_buckets']} bucket(s); version "
+                f"{res['version']} ({res['skipped_buckets']} lost to concurrent merges)"
             )
         elif args.delete:
             res = delete_from_lake(

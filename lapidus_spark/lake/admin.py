@@ -173,7 +173,6 @@ def compact_lake(
     target_files_per_bucket: int = 1,
     max_records_per_file: int | None = None,
     retain_versions: int = 1,
-    concurrency: str = "locked",
     cluster_by: tuple = ("entity_id",),
     stats_columns: tuple | None = None,
     bloom_columns: tuple | None = None,
@@ -194,28 +193,31 @@ def compact_lake(
     each bucket lands in exactly one task → one output file, with
     ``max_records_per_file`` as the splitting valve for buckets too
     large for a single file. Crash-safe like the merge: all new
-    bytes go to ``commits/<version>`` and the flip publishes them
-    atomically; a crash leaves the old layout fully live. Takes the
-    single-writer lock (compaction and merges never interleave).
+    bytes go to a nonce-named ``commits/<version>.<nonce>`` dir and
+    the flip publishes them atomically; a crash leaves the old layout
+    fully live.
 
-    Returns ``{"version", "compacted_buckets"}`` — version unchanged
-    when nothing needed work (no empty commits). Convergent under a
-    valve: the committed manifest records which commit was a
-    compaction and with what valve, so a bucket the valve split into
-    several files is NOT re-counted as degraded by the next
-    compaction (same valve) — no endless rewrite/version churn; a
-    merge that rewrites the bucket moves its pointer off the
-    compaction commit and re-arms the check.
-
-    ``concurrency="optimistic"`` removes the LONGEST lock-hold in the
-    system: the rewrite stages unlocked (writers keep committing) and
-    the flip applies PARTIALLY — any bucket a concurrent commit
+    Concurrency: the rewrite stages with NO lock held (writers keep
+    committing — a compaction never stalls a running sink's
+    micro-batch), and only the manifest flip takes the writer lock.
+    The flip applies PARTIALLY: any bucket a concurrent commit
     data-changed mid-flight is simply dropped from the compaction
     (the merge's pointer wins; the bucket re-arms for the next
     OPTIMIZE). No retry loop is ever needed because partial
     application is CORRECT for a pure physical rewrite — unlike a
-    merge, losing a race loses no data, only deferred maintenance.
-    Adds ``skipped_buckets`` to the result.
+    merge, losing a race loses no data, only deferred maintenance. A
+    lock still held past the flip wait defers the whole compaction
+    the same way (staging removed, nothing applied).
+
+    Returns ``{"version", "compacted_buckets", "skipped_buckets"}`` —
+    version unchanged when nothing needed work or every bucket was
+    lost to a race (no empty commits). Convergent under a valve: the
+    committed manifest records which commit was a compaction and with
+    what valve, so a bucket the valve split into several files is NOT
+    re-counted as degraded by the next compaction (same valve) — no
+    endless rewrite/version churn; a merge that rewrites the bucket
+    moves its pointer off the compaction commit and re-arms the
+    check.
 
     ``cluster_by`` picks the sort: the default single dimension
     (``entity_id``) gives range-DISJOINT file splits (point reads
@@ -224,73 +226,17 @@ def compact_lake(
     narrow at once — OPTIMIZE ZORDER BY, trading the single-axis
     disjointness guarantee for multi-axis prunability. Changing
     ``cluster_by`` re-arms convergence (a requested re-layout)."""
-    if concurrency not in ("locked", "optimistic"):
-        raise ValueError(
-            f"concurrency must be 'locked' or 'optimistic', got {concurrency!r}"
-        )
-    cluster_by = _validate_cluster_by(cluster_by)
-    if concurrency == "optimistic":
-        return _compact_optimistic(
-            spark,
-            lake_dir,
-            target_files_per_bucket,
-            max_records_per_file,
-            retain_versions,
-            cluster_by=cluster_by,
-            stats_columns=stats_columns,
-            bloom_columns=bloom_columns,
-            bloom_bits=bloom_bits,
-        )
-    lock = _acquire_lock(lake_dir, wait_s=LOCKED_WAIT_S)
-    try:
-        manifest = _healed_manifest(lake_dir)
-        if manifest is None:
-            raise ValueError(f"lake at {lake_dir} has no manifest to compact")
-        stats_columns = _resolve_stats_columns(manifest, stats_columns)
-        bloom_columns = _resolve_bloom_columns(manifest, bloom_columns)
-        degraded = _degraded_buckets(
-            lake_dir, manifest, target_files_per_bucket, max_records_per_file, cluster_by
-        )
-        if not degraded:
-            return {"version": manifest["version"], "compacted_buckets": 0}
-        rows = log._read_live(spark, lake_dir, manifest, set(degraded))
-        # CLUSTERED rewrite: one task per bucket, sorted on the
-        # cluster dimensions (lexical for one, Z-order for two), so
-        # the valve's file splits carry prunable ranges — the zone
-        # maps recorded from the staged footers make lake_point_read
-        # / lake_time_read open a file subset instead of bucket dirs.
-        packed = _cluster_sorted(rows, len(degraded), cluster_by)
-        version = manifest["version"] + 1
-        _publish_version(
-            lake_dir,
-            manifest,
-            packed,
-            degraded,
-            manifest["n_buckets"],
-            retain_versions,
-            max_records_per_file=max_records_per_file,
-            extra={
-                "compaction": {
-                    "version": version,
-                    "valve": max_records_per_file,
-                    "rel": f"commits/{version:010d}",
-                    "cluster_by": list(cluster_by),
-                },
-                "stats_columns": list(stats_columns),
-                "bloom_columns": list(bloom_columns),
-            },
-            data_change=False,
-            with_file_stats=True,
-            stats_columns=stats_columns,
-            bloom_columns=bloom_columns,
-            bloom_bits=bloom_bits,
-        )
-        return {"version": version, "compacted_buckets": len(degraded)}
-    finally:
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass
+    return _compact(
+        spark,
+        lake_dir,
+        target_files_per_bucket,
+        max_records_per_file,
+        retain_versions,
+        cluster_by=_validate_cluster_by(cluster_by),
+        stats_columns=stats_columns,
+        bloom_columns=bloom_columns,
+        bloom_bits=bloom_bits,
+    )
 
 
 def _degraded_buckets(
@@ -305,7 +251,7 @@ def _degraded_buckets(
     than the target — excluding buckets still pointing into the last
     compaction commit under the SAME valve AND cluster dimensions
     (the convergence check; keyed on the recorded commit ``rel`` so
-    it survives nonce-named optimistic compaction dirs, with the
+    it survives nonce-named compaction dirs, with the
     version-derived name as the pre-``rel`` manifest fallback —
     switching ``cluster_by`` re-arms every bucket: a re-cluster is a
     requested layout change, not churn)."""
@@ -346,7 +292,7 @@ def _degraded_buckets(
     return sorted(degraded)
 
 
-def _compact_optimistic(
+def _compact(
     spark,
     lake_dir: str,
     target_files_per_bucket: int,
@@ -359,21 +305,28 @@ def _compact_optimistic(
     bloom_columns: tuple | None = None,
     bloom_bits: int | None = None,
 ) -> dict:
-    """Lock-free-staging OPTIMIZE (see ``compact_lake``): read and
-    rewrite the degraded buckets with NO lock held, then under the
-    flip lock apply only the buckets no concurrent commit
-    data-changed meanwhile (the ``data_versions`` stamps decide; a
-    concurrent COMPACTION's equal stamps are also a skip-free apply —
-    two racing optimizers both land, the second a harmless no-op
-    rewrite). Dropped buckets' staged files stay inside the commit
-    dir as dead weight until the dir leaves every retained manifest —
-    wasted space bounded by the lost buckets, never wrong data."""
+    """The OPTIMIZE behind ``compact_lake``: read and rewrite the
+    degraded buckets with NO lock held, then under the flip lock
+    apply only the buckets no concurrent commit data-changed
+    meanwhile (the ``data_versions`` stamps decide; a concurrent
+    COMPACTION's equal stamps are also a skip-free apply — two racing
+    optimizers both land, the second a harmless no-op rewrite).
+    Dropped buckets' staged files stay inside the commit dir as dead
+    weight until the dir leaves every retained manifest — wasted
+    space bounded by the lost buckets, never wrong data.
+    ``flip_wait_s`` and ``_race_hook`` (run between staging and the
+    flip) are test seams."""
     import shutil
     import uuid
 
     base = _healed_manifest(lake_dir)
     if base is None:
         raise ValueError(f"lake at {lake_dir} has no manifest to compact")
+    # declarations are validated up front: a bad name must raise even
+    # when nothing is degraded, and never be swallowed as a lost race
+    # by the staging handler below
+    stats_columns = _resolve_stats_columns(base, stats_columns)
+    bloom_columns = _resolve_bloom_columns(base, bloom_columns)
     degraded = _degraded_buckets(
         lake_dir, base, target_files_per_bucket, max_records_per_file, cluster_by
     )
@@ -381,10 +334,12 @@ def _compact_optimistic(
         return {"version": base["version"], "compacted_buckets": 0, "skipped_buckets": 0}
     commit_rel = f"commits/{base['version'] + 1:010d}.{uuid.uuid4().hex[:8]}"
     try:
-        stats_columns = _resolve_stats_columns(base, stats_columns)
-        bloom_columns = _resolve_bloom_columns(base, bloom_columns)
         rows = log._read_live(spark, lake_dir, base, set(degraded))
-        # clustered, like the locked path — zone maps from the footers
+        # CLUSTERED rewrite: one task per bucket, sorted on the
+        # cluster dimensions (lexical for one, Z-order for two), so
+        # the valve's file splits carry prunable ranges — the zone
+        # maps recorded from the staged footers make lake_point_read
+        # / lake_time_read open a file subset instead of bucket dirs.
         packed = _cluster_sorted(rows, len(degraded), cluster_by)
         log._stage_commit(lake_dir, packed, degraded, commit_rel, max_records_per_file)
         staged_stats = _commit_file_stats(lake_dir, commit_rel, degraded, stats_columns)
@@ -561,8 +516,8 @@ def rebucket_lake(
                 # recognize this exact version step as a snapshot-
                 # identical layout swap (zero change rows) instead of
                 # demanding a full-snapshot restart; data stamps still
-                # reset (data_change=True) because bucket ids change
-                # meaning across the swap.
+                # reset (a data-changing publish) because bucket ids
+                # change meaning across the swap.
                 extra={
                     "rebucket": {
                         "version": manifest["version"] + 1,
@@ -948,7 +903,6 @@ def delete_from_lake(
             manifest["n_buckets"],
             retain_versions,
             max_records_per_file=max_records_per_file,
-            data_change=True,
         )
         return {
             "version": int(new_manifest["version"]),

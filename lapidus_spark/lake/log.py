@@ -112,15 +112,15 @@ class ConstraintViolationError(RuntimeError):
     constraint — the commit is refused, the table unchanged."""
 
 
-#: How long LOCKED writers (merge_batch_into_lake, compact_lake,
-#: rebucket_lake) re-contend for the writer lock before raising
+#: How long LOCKED writers (merge_batch_into_lake, rebucket_lake and
+#: the other admin ops) re-contend for the writer lock before raising
 #: ConcurrentMergeError. Nonzero so a locked daemon's micro-batch
-#: rides out an optimistic sibling's flip-lock hold (a JSON rename
-#: plus GC, milliseconds) instead of dying on a transient — a LIVE
-#: long holder (another locked writer mid-merge) still raises, just
-#: after the wait. Streaming sinks rely on this: the CLI's
-#: ``--optimistic`` contract is that a running locked daemon keeps
-#: committing while an optimistic writer flips.
+#: rides out a sibling's flip-lock hold (an optimistic merge's or a
+#: compaction's JSON rename plus GC, milliseconds) instead of dying
+#: on a transient — a LIVE long holder (another locked writer
+#: mid-merge) still raises, just after the wait. Streaming sinks rely
+#: on this: a running locked daemon keeps committing while an
+#: optimistic writer or ``--compact`` flips.
 LOCKED_WAIT_S = 5.0
 
 #: Unreferenced ``commits/`` dirs younger than this are NOT garbage:
@@ -1101,56 +1101,23 @@ def _publish_version(
     replace_all: bool = False,
     max_records_per_file: int | None = None,
     extra: dict | None = None,
-    data_change: bool = True,
-    with_file_stats: bool = False,
-    stats_columns: tuple = (),
     txn: tuple | None = None,
-    bloom_columns: tuple = (),
-    bloom_bits: int | None = None,
 ) -> dict:
-    """The shared publish step of every table-mutating op (merge,
-    compact, rebucket): write ``rows`` (bucket column already set) for
-    exactly the ``touched`` buckets into a FRESH ``commits/<version>``
-    directory — never into live paths, so readers (and a replay after
-    a crash) are untouched — then atomically flip the manifest,
-    record it in ``_history/``, and GC beyond the retention horizon.
-    ``replace_all`` swaps the ENTIRE bucket map (rebucket: the old
-    layout's pointers must not survive) instead of updating the
-    touched pointers.
-
-    ``data_change=False`` declares the commit a PURE PHYSICAL rewrite
-    (compaction): the touched buckets' pointers move, but their
-    ``data_versions`` stamps — the per-bucket last data-changing
-    commit, Delta's ``dataChange`` bit at bucket granularity — carry
-    through unchanged, so change-feed consumers (``lake_changes``,
-    the ``lake_cdf`` streaming source) skip the rewritten buckets
-    entirely instead of re-reading them to emit zero rows.
-
-    ``with_file_stats=True`` gathers per-file entity_id zone maps
-    from the staged footers (metadata-sized driver work) and records
-    them in the manifest — the clustered-compaction path."""
+    """The shared publish step of the locked table-mutating ops
+    (merge, rebucket, delete): write ``rows`` (bucket column already
+    set) for exactly the ``touched`` buckets into a FRESH
+    ``commits/<version>`` directory — never into live paths, so
+    readers (and a replay after a crash) are untouched — then
+    atomically flip the manifest, record it in ``_history/``, and GC
+    beyond the retention horizon. ``replace_all`` swaps the ENTIRE
+    bucket map (rebucket: the old layout's pointers must not survive)
+    instead of updating the touched pointers. Every commit it
+    publishes is data-changing (the touched buckets' ``data_versions``
+    stamps move); the physical-only compaction stages and flips
+    itself."""
     version = (manifest["version"] if manifest else 0) + 1
     commit_rel = f"commits/{version:010d}"
     _stage_commit(lake_dir, rows, touched, commit_rel, max_records_per_file)
-    if with_file_stats:
-        # lazy: the zone-map footer reader lives in the read/stats
-        # plane (stats.py), which imports this module
-        from .stats import _commit_file_stats, _write_bloom_sidecar
-
-        stats = _commit_file_stats(lake_dir, commit_rel, touched, stats_columns)
-        if bloom_columns:
-            # sidecar into the STAGED dir (invisible until the flip)
-            _write_bloom_sidecar(
-                rows.sparkSession,
-                lake_dir,
-                commit_rel,
-                touched,
-                bloom_columns,
-                manifest,
-                bloom_bits=bloom_bits,
-            )
-    else:
-        stats = None
     return _flip_version(
         lake_dir,
         manifest,
@@ -1160,8 +1127,6 @@ def _publish_version(
         retain_versions,
         replace_all=replace_all,
         extra=extra,
-        data_change=data_change,
-        file_stats=stats,
         txn=txn,
     )
 

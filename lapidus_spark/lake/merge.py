@@ -1509,9 +1509,9 @@ def merge_lake_sink(
         # opportunistic maintenance: every compact_every-th micro-batch
         # heals the sink's own small-file accretion in-line (a no-op —
         # no new version — when nothing is degraded, so checkpoint
-        # replays of a compacting epoch stay idempotent). Runs between
-        # this batch's commit and the next batch's lock acquisition,
-        # so it never interleaves with a merge.
+        # replays of a compacting epoch stay idempotent). The rewrite
+        # stages unlocked, so a sibling sink's mid-flight merge just
+        # drops its buckets from this compaction instead of waiting.
         # guard: all-empty/gated batches so far mean no manifest yet —
         # skip rather than kill the stream on "no manifest to compact"
         if (
@@ -1519,14 +1519,8 @@ def merge_lake_sink(
             and (epoch_id + 1) % compact_every == 0
             and _read_manifest(lake_dir) is not None
         ):
-            # optimistic sinks compact optimistically too: a sibling
-            # sink's mid-flight merge just drops those buckets from
-            # this compaction instead of deadlocking on the lock
             compact_lake(
-                batch_df.sparkSession,
-                lake_dir,
-                retain_versions=retain_versions,
-                concurrency=concurrency,
+                batch_df.sparkSession, lake_dir, retain_versions=retain_versions
             )
 
     # append mode: the stateful combine lives INSIDE the batch merge,

@@ -122,7 +122,7 @@ from lapidus_spark.lake.merge import (  # noqa: F401
 )
 from lapidus_spark.lake.admin import (  # noqa: F401
     _cluster_sorted,
-    _compact_optimistic,
+    _compact,
     _degraded_buckets,
     _validate_cluster_by,
     add_constraint,

@@ -2594,7 +2594,6 @@ def build_clustered_lake(spark: SparkSession, sf_dir: str) -> str:
         lake,
         target_files_per_bucket=0,
         max_records_per_file=64,
-        concurrency="optimistic",
     )
     _CLUSTERED_LAKES[sf_dir] = lake
     return lake

@@ -3,7 +3,9 @@ merge staging: locked and optimistic writers, each with and without a
 CHECK constraint, plus the predicate upsert through
 ``merge_into_lake``. Each count is taken for ONE merge onto a lake
 that already holds one data commit, so the staged plan reads stored
-buckets (the steady-state shape, not the empty-lake bootstrap).
+buckets (the steady-state shape, not the empty-lake bootstrap). One
+compaction (``compact_lake`` with zone-map and Bloom-filter columns
+declared) is pinned the same way.
 
 The job count is the third "same behaviour" pin next to oracle parity
 and the plan-audit contracts: a refactor of the staging step that
@@ -93,3 +95,32 @@ def test_merge_spark_jobs_pinned(spark, tmp_path, case):
     n = _jobs_of(spark, f"merge_jobs_{case}", lambda: merge(spark, lake))
     assert M._read_manifest(lake)["version"] == version + 1
     assert n == expected, f"{case}: {n} Spark jobs per merge, pinned {expected}"
+
+
+#: Spark jobs of one compaction rewriting every bucket with stats and
+#: Bloom-filter columns declared
+COMPACT_JOBS = 6
+
+
+def test_compaction_spark_jobs_pinned(spark, tmp_path):
+    lake = str(tmp_path / "lake")
+    M.merge_batch_into_lake(_env(spark, range(40)), lake, n_buckets=4)
+    version = M._read_manifest(lake)["version"]
+    res = {}
+
+    def compact():
+        res.update(
+            M.compact_lake(
+                spark,
+                lake,
+                target_files_per_bucket=0,
+                stats_columns=("item",),
+                bloom_columns=("item",),
+            )
+        )
+
+    n = _jobs_of(spark, "compact_jobs", compact)
+    assert (res["version"], res["compacted_buckets"]) == (version + 1, 4)
+    m = M._read_manifest(lake)
+    assert len(m["file_stats"]) == 4 and m["bloom_columns"] == ["item"]
+    assert n == COMPACT_JOBS, f"{n} Spark jobs per compaction, pinned {COMPACT_JOBS}"

@@ -317,8 +317,8 @@ def test_occ_two_process_race(spark, tmp_path):
 
 
 def test_occ_compaction_uncontended_equals_locked(spark, tmp_path):
-    """With no concurrent writer, optimistic OPTIMIZE compacts the
-    same buckets as the locked path would, publishes the same
+    """With no concurrent writer, the unlocked-staging OPTIMIZE
+    compacts every degraded bucket and skips none, publishes a
     bit-identical snapshot, records the convergence marker (keyed on
     the nonce-named commit rel), and an immediate re-run under the
     same valve compacts nothing (no rewrite churn)."""
@@ -329,17 +329,40 @@ def test_occ_compaction_uncontended_equals_locked(spark, tmp_path):
     for i in range(3):
         M.merge_batch_into_lake(env.filter(F.col("event_seq") % 3 == i), lake)
     before = _rows(spark, lake)
-    res = M.compact_lake(
-        spark, lake, target_files_per_bucket=0, concurrency="optimistic"
-    )
+    res = M.compact_lake(spark, lake, target_files_per_bucket=0)
     assert res["compacted_buckets"] > 0 and res["skipped_buckets"] == 0
     assert _rows(spark, lake) == before  # pure physical rewrite
     m = M._read_manifest(lake)
     assert m["compaction"]["rel"].startswith("commits/") and "." in m["compaction"]["rel"]
-    again = M.compact_lake(
-        spark, lake, target_files_per_bucket=0, concurrency="optimistic"
-    )
+    again = M.compact_lake(spark, lake, target_files_per_bucket=0)
     assert again["compacted_buckets"] == 0  # convergence survives nonce names
+
+
+def test_compaction_stages_with_no_writer_lock_held(spark, tmp_path, monkeypatch):
+    """compact_lake's Spark rewrite runs with the writer lock FREE —
+    a running sink's micro-batch never waits behind an OPTIMIZE — and
+    only the manifest flip afterwards takes the lock."""
+    import lapidus_spark.streaming.materialize as M
+    from lapidus_spark.lake import log
+
+    env = _env(spark)
+    lake = str(tmp_path / "lake")
+    for i in range(2):
+        M.merge_batch_into_lake(env.filter(F.col("event_seq") % 2 == i), lake)
+    lock_path = os.path.join(lake, M.LOCK_NAME)
+    held = []
+    stage = log._stage_commit
+
+    def spy(lake_dir, *args, **kw):
+        held.append(os.path.exists(lock_path))
+        stage(lake_dir, *args, **kw)
+        held.append(os.path.exists(lock_path))
+
+    monkeypatch.setattr(log, "_stage_commit", spy)
+    res = M.compact_lake(spark, lake, target_files_per_bucket=0)
+    assert res["compacted_buckets"] > 0
+    assert held == [False, False]
+    assert not os.path.exists(lock_path)  # the flip released it
 
 
 def test_occ_compaction_partial_apply_on_conflict(spark, tmp_path):
@@ -371,7 +394,7 @@ def test_occ_compaction_partial_apply_on_conflict(spark, tmp_path):
     def race():
         M.merge_batch_into_lake(interloper, lake)
 
-    res = M._compact_optimistic(
+    res = M._compact(
         spark, lake, 0, None, retain_versions=1, _race_hook=race
     )
     assert res["skipped_buckets"] == 1  # exactly the merged bucket
@@ -393,9 +416,7 @@ def test_occ_compaction_partial_apply_on_conflict(spark, tmp_path):
     M.merge_batch_into_lake(env.unionByName(interloper), one)
     assert _rows(spark, lake) == _rows(spark, one)
     # the skipped bucket re-arms: next OPTIMIZE compacts it
-    res2 = M.compact_lake(
-        spark, lake, target_files_per_bucket=0, concurrency="optimistic"
-    )
+    res2 = M.compact_lake(spark, lake, target_files_per_bucket=0)
     assert res2["compacted_buckets"] == 1 and res2["skipped_buckets"] == 0
     del os
 
@@ -415,7 +436,7 @@ def test_occ_compaction_aborts_on_rebucket(spark, tmp_path):
     def race():
         M.rebucket_lake(spark, lake, new_n_buckets=4)
 
-    res = M._compact_optimistic(
+    res = M._compact(
         spark, lake, 0, None, retain_versions=1, _race_hook=race
     )
     assert res["compacted_buckets"] == 0 and res["skipped_buckets"] > 0
@@ -456,8 +477,8 @@ def test_occ_held_flip_lock_consumes_attempts_not_crash(spark, tmp_path):
     """A flip lock held past flip_wait_s is absorbed by the retry
     budget (CommitConflictError's contract), never escapes as
     ConcurrentMergeError, and every attempt's staging is cleaned up.
-    The deferrable optimistic COMPACTION instead drops its work and
-    returns zero-compacted."""
+    The deferrable COMPACTION instead drops its work and returns
+    zero-compacted."""
     import json
     import socket
 
@@ -479,7 +500,7 @@ def test_occ_held_flip_lock_consumes_attempts_not_crash(spark, tmp_path):
                 flip_wait_s=0.2,
             )
         assert [d for d in os.listdir(os.path.join(lake, "commits")) if "." in d] == []
-        res = M._compact_optimistic(
+        res = M._compact(
             spark, lake, 0, None, retain_versions=1, flip_wait_s=0.2
         )
         assert res["compacted_buckets"] == 0 and res["skipped_buckets"] > 0
@@ -662,9 +683,9 @@ def test_describe_history_ignores_orphan_log_entries(spark, tmp_path):
 
 def test_locked_merge_rides_out_transient_flip_lock(spark, tmp_path):
     """A locked writer arriving while another writer briefly holds the
-    flip lock must WAIT it out (LOCKED_WAIT_S), not die — the CLI's
-    --optimistic contract says a running locked daemon keeps
-    committing across an optimistic sibling's millisecond flip."""
+    flip lock must WAIT it out (LOCKED_WAIT_S), not die — a running
+    locked daemon keeps committing across an optimistic merge's or a
+    compaction's millisecond flip."""
     import threading
     import time
 

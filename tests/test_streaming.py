@@ -2146,7 +2146,7 @@ def test_compact_lake_physical_only(spark, tmp_path):
     assert _snapshot_rows(spark, lake) == before
     # idempotent: nothing degraded now → no new version
     res2 = compact_lake(spark, lake)
-    assert res2 == {"version": m1["version"], "compacted_buckets": 0}
+    assert res2 == {"version": m1["version"], "compacted_buckets": 0, "skipped_buckets": 0}
     assert _read_manifest(lake)["version"] == m1["version"]
 
 
@@ -2294,8 +2294,8 @@ def test_cli_maintenance_commands(spark, tmp_path, capsys):
     before = _snapshot_rows(spark, lake)
     assert main(["--compact", lake]) == 0
     assert "compacted" in capsys.readouterr().out
-    # the OCC variant: stages unlocked, reports buckets lost to races
-    assert main(["--compact", lake, "--optimistic", "--target-files-per-bucket", "0"]) == 0
+    # compaction stages unlocked and always reports buckets lost to races
+    assert main(["--compact", lake, "--target-files-per-bucket", "0"]) == 0
     assert "lost to concurrent merges" in capsys.readouterr().out
     assert main(["--rebucket", lake, "--buckets", "8"]) == 0
     assert _read_manifest(lake)["n_buckets"] == 8
@@ -2305,7 +2305,7 @@ def test_cli_maintenance_commands(spark, tmp_path, capsys):
         ["--rebucket", lake],  # missing --buckets
         ["--compact", lake, "--rebucket", lake, "--buckets", "8"],
         ["--compact", lake, "-c", "x.json"],
-        ["--rebucket", lake, "--buckets", "8", "--optimistic"],
+        ["--rebucket", lake, "--buckets", "8", "--optimistic"],  # unknown flag
     ):
         with pytest.raises(SystemExit) as e:
             main(bad)
@@ -2607,7 +2607,7 @@ def test_compact_lake_valve_convergence(spark, tmp_path):
     assert r1["compacted_buckets"] > 0
     # same valve again: buckets the valve split stay converged
     r2 = compact_lake(spark, lake, max_records_per_file=2)
-    assert r2 == {"version": r1["version"], "compacted_buckets": 0}
+    assert r2 == {"version": r1["version"], "compacted_buckets": 0, "skipped_buckets": 0}
     # valve change re-arms exactly once, then converges
     r3 = compact_lake(spark, lake)
     assert r3["version"] == r1["version"] + 1 and r3["compacted_buckets"] > 0

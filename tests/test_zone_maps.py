@@ -174,7 +174,7 @@ def test_optimistic_compaction_stats_only_for_kept_buckets(spark, tmp_path):
     def race():
         M.merge_batch_into_lake(interloper, lake, retain_versions=6)
 
-    res = M._compact_optimistic(
+    res = M._compact(
         spark, lake, 0, 20, retain_versions=6, _race_hook=race
     )
     assert res["skipped_buckets"] == 1 and res["compacted_buckets"] > 0
